@@ -166,4 +166,27 @@ class BenchSpec extends AnyFunSuite {
     assert(line.contains(
       "\"q02\":[8.10,10.85,15.20,0.30,15.00,0.20,70.10,1.20,33,-30,99,97]"))
   }
+
+  test("a flagged run never overwrites a zero-flag per-core-count record") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-record")
+    def path(name: String) = dir.resolve(name).toString
+    def read(name: String) = new String(
+      java.nio.file.Files.readAllBytes(dir.resolve(name)), "UTF-8").trim
+    val (cpus, last, marker) =
+      (path("BENCH_FULL_c4.json"), path("BENCH_FULL.json"), path("BENCH_FULL_c4_FLAGGED.json"))
+    val clean = """{"metric":"total","value":1.0,"flagged":{}}"""
+    val noisy = """{"metric":"total","value":9.0,"flagged":{"q05_x":{"sec":6.0}}}"""
+    // First record: nothing stored yet, so even a flagged run writes it.
+    assert(Bench.writeFullRecord(noisy, cpus, last, flagged = true) == cpus)
+    assert(read("BENCH_FULL_c4.json") == noisy)
+    // A clean run replaces a flagged record.
+    assert(Bench.writeFullRecord(clean, cpus, last, flagged = false) == cpus)
+    assert(read("BENCH_FULL_c4.json") == clean && read("BENCH_FULL.json") == clean)
+    // A flagged run keeps the clean record and points at its marker copy.
+    assert(Bench.writeFullRecord(noisy, cpus, last, flagged = true) == marker)
+    assert(read("BENCH_FULL_c4.json") == clean)
+    assert(read("BENCH_FULL.json") == noisy && read("BENCH_FULL_c4_FLAGGED.json") == noisy)
+    Seq(cpus, last, marker).foreach(f => new java.io.File(f).delete())
+    dir.toFile.delete()
+  }
 }
